@@ -77,6 +77,20 @@ def _vs_round_compare(timings: dict, total: float, sf) -> dict | None:
     }
 
 
+def _run(fn, spark, sf_dir: str) -> float:
+    """Wall seconds of one full execution of a query (noop sink: no
+    driver-side collection)."""
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return round(time.perf_counter() - t0, 4)
+
+
+def _error(exc: BaseException) -> str:
+    """First line of an error, short enough for the one-line report."""
+    first = (str(exc).strip().splitlines() or [""])[0]
+    return f"{type(exc).__name__}: {first}"[:300]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -144,6 +158,10 @@ def main() -> None:
     ordered.update({n: f for n, f in qs.items() if n.startswith("stream_")})
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
+    # one failing query must not take the bench down: it is reported by
+    # name under "errors", left out of the totals, and the exit status
+    # is non-zero
+    errors: dict[str, str] = {}
     for name, fn in ordered.items():
         # steady-state measurement: the first execution pays one-time
         # whole-stage-codegen (janino) compilation of the query's
@@ -158,17 +176,26 @@ def main() -> None:
         # full stream through a fresh sink, so a second run measures the
         # same work.)
         runs = 1 if name.startswith("stream_") else 2
-        for r in range(runs):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            # force full execution without driver-side collection
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = round(time.perf_counter() - t0, 4)
-            if r == 0:
-                cold[name] = elapsed
-                timings[name] = elapsed
-            else:
-                timings[name] = min(timings[name], elapsed)
+        try:
+            for r in range(runs):
+                elapsed = _run(fn, spark, sf_dir)
+                if r == 0:
+                    cold[name] = elapsed
+                    timings[name] = elapsed
+                else:
+                    timings[name] = min(timings[name], elapsed)
+        except Exception as exc:
+            errors[name] = _error(exc)
+            timings.pop(name, None)
+            cold.pop(name, None)
+
+    def remeasure(name: str) -> None:
+        """Two extra runs of a flagged query; the minimum wins."""
+        try:
+            for _ in range(2):
+                timings[name] = min(timings[name], _run(qs[name], spark, sf_dir))
+        except Exception as exc:
+            errors[name] = _error(exc)
 
     total = round(sum(timings.values()), 4)
 
@@ -222,13 +249,7 @@ def main() -> None:
     # 1.5x gate trigger-happy on the next run (ADVICE r6).
     history_timings = dict(timings)
     for name in list(regressions):
-        fn = qs[name]
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = min(
-                timings[name], round(time.perf_counter() - t0, 4)
-            )
+        remeasure(name)
     if regressions:
         total = round(sum(timings.values()), 4)
         regressions = flagged()
@@ -255,18 +276,8 @@ def main() -> None:
     # two extra runs per flagged query.
     if vs_round and vs_round.get("flags"):
         for name in list(vs_round["flags"]):
-            fn = qs.get(name)
-            if fn is None:
-                continue
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                timings[name] = min(
-                    timings[name],
-                    round(time.perf_counter() - t0, 4),
-                )
+            if name in qs:
+                remeasure(name)
         total = round(sum(timings.values()), 4)
         vs_round = _vs_round_compare(timings, total, sf)
 
@@ -292,6 +303,8 @@ def main() -> None:
                 # previous round's stamped run (normalized by the
                 # run-level ratio like the in-round gate)
                 "vs_round": vs_round,
+                # queries that raised, by name: first line of the error
+                "errors": errors,
                 # variance-normalized headline (VERDICT r3 item 7): the
                 # per-query median of the last 5 same-sf runs, summed —
                 # compare THIS across rounds; "value" below is the raw
@@ -305,6 +318,8 @@ def main() -> None:
         )
     )
     spark.stop()
+    if errors:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

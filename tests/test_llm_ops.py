@@ -1167,6 +1167,7 @@ def test_unit_and_lsh_bucket_null_handling(spark):
             "id",
             unit(F.col("v"), F.col("n")).alias("u"),
             lsh_bucket(F.col("v"), planes).alias("b"),
+            lsh_bucket(F.col("v"), []).alias("b0"),
         )
         .toPandas()
         .set_index("id")
@@ -1176,6 +1177,9 @@ def test_unit_and_lsh_bucket_null_handling(spark):
     assert pd.isna(out.loc[3, "b"])  # NULL vector -> NULL bucket
     assert pd.isna(out.loc[4, "b"])  # ragged vector -> NULL bucket
     assert not pd.isna(out.loc[2, "b"])  # zero vector is a VALID bucket
+    # no hyperplanes: every non-NULL vector shares bucket 0
+    assert out.loc[[1, 2, 4], "b0"].tolist() == [0, 0, 0]
+    assert pd.isna(out.loc[3, "b0"])
 
 
 def test_fuzzy_join_pairs_hand_checked(spark):

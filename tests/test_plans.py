@@ -6,9 +6,15 @@ they are stable across machines."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
+from vtk_reserves_spark.operators.reserves import grid_depletion
+from vtk_reserves_spark.operators.spatial import annotate_spatial
+from vtk_reserves_spark.sources.grid import grid_df
+from vtk_reserves_spark.sources.mesh import TriMesh
 from tests.conftest import TESTDATA
 
 
@@ -100,6 +106,38 @@ def test_tfidf_broadcasts_idf_map(spark):
     # the token stream itself is never broadcast
     assert plan.count("BroadcastHashJoin") >= 1
     assert "BroadcastNestedLoopJoin" in plan or plan.count("BroadcastExchange") >= 2
+
+
+def _python_udf_calls(plan: str) -> int:
+    """Python UDF calls listed across every ArrowEvalPython node."""
+    calls = 0
+    for block in plan.split("\n\n"):
+        if re.match(r"\(\d+\) ArrowEvalPython", block):
+            args = next(l for l in block.splitlines() if l.startswith("Arguments"))
+            calls += len(re.findall(r"pythonUDF\d+#", args))
+    return calls
+
+
+def _spatial_fixture(spark):
+    regions = [TriMesh.box(b, name=n) for n, b in entry._BOXES]
+    include = [TriMesh.plane_quad(0.1, 0.05, 120.0, ((0.0, 0.0), (300.0, 200.0)))]
+    exclude = [TriMesh.plane_quad(0.0, 0.0, 30.0, ((0.0, 0.0), (300.0, 200.0)))]
+    return grid_df(spark, entry._GS), regions, include, exclude
+
+
+def test_grid_depletion_one_probe_per_step(spark):
+    """Mesh regions and mesh surfaces: one probe flags every cell, the
+    unflagged cells are dropped, and one probe depletes the rest — each
+    mesh is scanned once per row it needs."""
+    grid, regions, include, exclude = _spatial_fixture(spark)
+    plan = _plan(grid_depletion(grid, regions, include, exclude))
+    assert _python_udf_calls(plan) == 2
+
+
+def test_annotate_spatial_one_probe(spark):
+    grid, regions, include, exclude = _spatial_fixture(spark)
+    df = annotate_spatial(grid, regions=regions, include=include, exclude=exclude)
+    assert _python_udf_calls(_plan(df.filter(F.col("region") != ""))) == 1
 
 
 def test_annotate_spatial_single_udf(spark):

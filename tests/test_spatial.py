@@ -15,7 +15,6 @@ from vtk_reserves_spark.operators.spatial import (
     PlaneSurface,
     flag_regions,
     flag_regions_2d,
-    flag_regions_bbox,
     mine_fraction,
     point_in_solid,
     surface_elevation,
@@ -56,15 +55,22 @@ def test_point_in_solid_kernel():
 
 def test_flag_regions_raycast_equals_bbox(grid):
     meshes = [TriMesh.box(b, name=n) for n, b in BOXES]
-    ray = flag_regions(grid, meshes).select("cell", "region").toPandas()
-    box = flag_regions_bbox(grid, BOXES).select("cell", "region").toPandas()
-    merged = ray.merge(box, on="cell", suffixes=("_ray", "_box"))
-    diff = merged[merged.region_ray != merged.region_box]
-    assert diff.empty, diff.head()
+    box = flag_regions(grid, BOXES).select("cell", "region").toPandas()
+    # all meshes, and a list mixing meshes with (name, bounds) boxes
+    mixed = [meshes[0], BOXES[1], meshes[2]]
+    for regions in (meshes, mixed):
+        ray = flag_regions(grid, regions).select("cell", "region").toPandas()
+        merged = ray.merge(box, on="cell", suffixes=("_ray", "_box"))
+        diff = merged[merged.region_ray != merged.region_box]
+        assert len(merged) == len(box) and diff.empty, diff.head()
     # spot-check against the analytic rule
     sample = flag_regions(grid, meshes).select("x", "y", "z", "region").toPandas()
     expect = sample.apply(lambda r: _expected_region(r.x, r.y, r.z), axis=1)
     assert (sample.region == expect).all()
+    # grid_depletion takes the mix too and keeps the same flagged cells
+    got = grid_depletion(grid, regions=mixed).select("cell", "region").toPandas()
+    want = box[box.region != ""]
+    assert sorted(zip(got.cell, got.region)) == sorted(zip(want.cell, want.region))
 
 
 def test_flag_regions_2d_footprint(grid):
@@ -111,6 +117,21 @@ def test_mine_fraction_planes(grid):
     m_inc = np.clip((zs - out.z + 5.0) / 10.0, 0.0, 1.0)
     m_exc = np.clip((30.0 - out.z + 5.0) / 10.0, 0.0, 1.0)
     assert np.allclose(out.mine, m_inc * (1.0 - m_exc), atol=1e-12)
+
+
+def test_depletion_requires_dz(grid):
+    """Depleting by a surface needs the cell height: mine_fraction and
+    annotate_spatial fail alike on a grid without ``dz``."""
+    from pyspark.errors import AnalysisException
+
+    from vtk_reserves_spark.operators.spatial import annotate_spatial
+
+    no_dz = grid.drop("dz")
+    quad = TriMesh.plane_quad(0.0, 0.0, 100.0, ((0.0, 0.0), (100.0, 100.0)))
+    for surf in (PlaneSurface(0.0, 0.0, 100.0), quad):
+        for op in (mine_fraction, annotate_spatial):
+            with pytest.raises(AnalysisException, match="`dz`"):
+                op(no_dz, include=[surf])
 
 
 def test_mine_fraction_blank_include_fills_one(grid):

@@ -77,6 +77,10 @@ def lsh_bucket(vec: Column, hyperplanes: list[list[float]]) -> Column:
     NULL-propagation contract bit-for-bit."""
     from vtk_reserves_spark.functions.plan_literals import lit_double_matrix
 
+    if not hyperplanes:
+        # zero bits: one bucket.  The general path would zip the empty
+        # matrix with sequence(0, -1) = [0, -1] and yield NULL.
+        return F.when(vec.isNotNull(), F.lit(0))
     mat = lit_double_matrix(hyperplanes)
     idx = F.sequence(F.lit(0), F.lit(len(hyperplanes) - 1))
     bits = F.zip_with(

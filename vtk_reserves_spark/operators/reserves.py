@@ -1,8 +1,8 @@
 """The flagship reserves pipeline — ``vtk_reserves``
 (``vtk_reserves.py:44-134``) as one lazy DataFrame chain:
 
-    grid -> ensure volume -> mine fraction -> region flags
-         -> drop unflagged rows -> breakdown report
+    grid -> ensure volume -> region flags -> drop unflagged rows
+         -> mine fraction -> breakdown report
 
 Catalyst is the planner the reference lacks: the whole pipeline is a
 single logical plan (scan/generate -> projections -> one aggregation),
@@ -15,15 +15,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vtk_reserves_spark.operators.breakdown import breakdown
-from vtk_reserves_spark.operators.spatial import (
-    flag_regions,
-    flag_regions_bbox,
-    mine_fraction,
-)
+from vtk_reserves_spark.operators.spatial import flag_regions, mine_fraction
 from vtk_reserves_spark.plans.commalist import parse_commalist
 from vtk_reserves_spark.plans.template import vl_add_region, vl_add_weight
 from vtk_reserves_spark.sources.grid import GridSchema, grid_df
-from vtk_reserves_spark.sources.mesh import TriMesh
 
 
 def grid_depletion(
@@ -35,41 +30,25 @@ def grid_depletion(
     mine_col: str = "mine",
 ) -> DataFrame:
     """Load + flag stage (``pd_grid_depletion``, ``vtk_reserves.py:44-90``):
-    ensure a ``volume`` array, compute the mined fraction, flag regions
-    (later meshes overwrite earlier), and drop rows outside every region
-    (``df.query("region != ''")``, ``vtk_reserves.py:86-88``).
+    ensure a ``volume`` array, flag regions (later regions overwrite
+    earlier), drop rows outside every region (``df.query("region !=
+    ''")``, ``vtk_reserves.py:86-88``) and compute the mined fraction.
 
-    ``regions`` entries may be :class:`TriMesh` solids (ray-cast path) or
-    ``(name, bounds)`` tuples (axis-aligned expression path)."""
+    ``regions`` entries may be :class:`TriMesh` solids, ``(name,
+    bounds)`` boxes or a mix (see :func:`flag_regions`).  The drop sits
+    between the two spatial steps because a mesh probe blocks filter
+    pushdown: this way each region mesh is scanned once per cell and
+    each surface mesh once per flagged cell."""
     if "volume" not in grid.columns:
         grid = grid.withColumn(
             "volume", F.col("dx") * F.col("dy") * F.col("dz")
         )  # cells_volume, pd_vtk.py:798-809
-    grid = mine_fraction(
+    if regions:
+        grid = flag_regions(grid, regions, flag_var=region_col)
+        grid = grid.filter(F.col(region_col) != "")
+    return mine_fraction(
         grid, include=mine_include, exclude=mine_exclude, mine_col=mine_col
     )
-    if regions:
-        boxes = [r for r in regions if isinstance(r, tuple)]
-        meshes = [r for r in regions if isinstance(r, TriMesh)]
-        unknown = [
-            r for r in regions
-            if not isinstance(r, tuple) and not isinstance(r, TriMesh)
-        ]
-        if unknown:
-            # silently dropping these used to flag EVERY row '' and the
-            # region filter then deleted the whole block model
-            raise TypeError(
-                "region entries must be (name, bounds) tuples or TriMesh "
-                f"solids; got {[type(r).__name__ for r in unknown]}"
-            )
-        if boxes and meshes:
-            raise ValueError("mix of bbox and mesh regions is not supported")
-        if boxes:
-            grid = flag_regions_bbox(grid, boxes, flag_var=region_col)
-        else:
-            grid = flag_regions(grid, meshes, flag_var=region_col)
-        grid = grid.filter(F.col(region_col) != "")
-    return grid
 
 
 def reserves_report(

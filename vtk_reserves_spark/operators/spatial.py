@@ -3,16 +3,24 @@
 The reference has no relational joins; its joins are geometric
 (point-vs-solid, point-vs-surface — SURVEY.md §2.5), implemented as
 O(cells × meshes) single-threaded VTK loops.  Here every spatial
-predicate is either:
+operator is column expressions over at most one kernel call:
 
-- a **pure column expression** (axis-aligned boxes, plane surfaces) —
-  the oracle-checkable fast path that also survives 100 TB, or
-- a **vectorized Arrow pandas-UDF against a task-broadcast mesh**
-  (arbitrary triangulated solids/surfaces): the mesh (KBs) rides in the
-  UDF closure; each executor scans its cell batches through a numpy
-  ray-cast kernel with a bounding-box pre-mask, so the work is
-  embarrassingly parallel across partitions and never shuffles the
-  block model.
+- axis-aligned ``(name, bounds)`` boxes and :class:`PlaneSurface`
+  surfaces are **pure column expressions** — full codegen, no Python,
+  exactly expressible in an SQL oracle;
+- triangulated :class:`TriMesh` solids and surfaces are read through
+  **one probe**: a single Arrow pandas-UDF over (x, y, z) that calls the
+  numpy ray-scan kernel once per mesh and returns a struct with, per
+  mesh ``i``, ``in<i>`` (the parity flag) and ``z<i>`` (the mean
+  crossing elevation, NULL when the ray misses).  The meshes (KBs) ride
+  in the UDF closure, so the scan is embarrassingly parallel across
+  partitions and never shuffles the block model.
+
+Region flags, elevations and depletion fractions are expressions over
+those fields: one overwrite ``when`` chain for regions and one
+clip/``greatest``/``coalesce(1 - f)`` rule for depletion, shared by
+:func:`flag_regions`, :func:`flag_regions_2d`, :func:`surface_elevation`,
+:func:`mine_fraction` and :func:`annotate_spatial`.
 
 Kernel: vertical (+z) ray crossing counts per point.  ``inside solid`` =
 odd number of crossings above the point (parity test — the semantics of
@@ -203,9 +211,148 @@ def point_in_solid(px, py, pz, mesh: TriMesh):
     return (n_above % 2) == 1
 
 
+#: struct column holding the probe's fields while one operator runs
+_PROBE = "__probe"
+
+
+class _Probe:
+    """One operator's mesh probe (see the module docstring): meshes are
+    registered while the operator builds its expressions, then
+    :meth:`apply` scans them all in one UDF call per record batch."""
+
+    def __init__(self) -> None:
+        self.meshes: list[TriMesh] = []
+
+    def field(self, mesh: TriMesh, kind: str) -> Column:
+        """``kind`` is ``"in"`` (parity flag) or ``"z"`` (mean crossing
+        elevation, NULL on a miss)."""
+        self.meshes.append(mesh)
+        return F.col(f"{_PROBE}.{kind}{len(self.meshes) - 1}")
+
+    def apply(self, df: DataFrame, xyz: list[Column], cols: dict[str, Column]) -> DataFrame:
+        """Add ``cols`` to ``df``, probing first if any of them reads a
+        mesh field."""
+        meshes = list(self.meshes)
+        if not meshes:
+            return df.withColumns(cols)
+        schema = ", ".join(f"in{i}: boolean, z{i}: double" for i in range(len(meshes)))
+
+        @F.pandas_udf(schema)
+        def probe(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.DataFrame:
+            px, py, pz = (s.to_numpy(np.float64) for s in (x, y, z))
+            out = {}
+            for i, mesh in enumerate(meshes):
+                n_above, n_hits, z_sum = _ray_scan(px, py, pz, mesh)
+                out[f"in{i}"] = n_above % 2 == 1
+                # NaN crosses the Arrow boundary as NULL
+                out[f"z{i}"] = np.where(n_hits > 0, z_sum / np.maximum(n_hits, 1), np.nan)
+            return pd.DataFrame(out)
+
+        # asNondeterministic keeps the probe in its own projection:
+        # Catalyst would otherwise inline the UDF into every consumer of
+        # a field (a filter on the flag plus the projection would each
+        # rerun the whole scan).  The UDF is pure; the flag only
+        # restricts the optimizer, and it also stops filters from being
+        # pushed below the probe.
+        return (
+            df.withColumn(_PROBE, probe.asNondeterministic()(*xyz))
+            .withColumns(cols)
+            .drop(_PROBE)
+        )
+
+
+def _entry_value(i: int, entry, values: list[str] | None) -> str:
+    """Flag value of region ``i``: ``values[i]`` if given, else the box
+    name or mesh name (= file basename in the reference pipeline,
+    ``vtk_reserves.py:74``), else the 1-based ordinal."""
+    if values is not None and i < len(values):
+        return str(values[i])
+    if isinstance(entry, tuple):
+        return entry[0]
+    return entry.name or str(i + 1)
+
+
+def _overwrite_chain(flags: list[tuple[str, Column]], default: Column) -> Column:
+    """Later regions OVERWRITE earlier ones (``vtk_flag_regions.py:63-73``):
+    the last region is tested first."""
+    expr = default
+    for value, inside in flags:
+        expr = F.when(inside, F.lit(value)).otherwise(expr)
+    return expr
+
+
+def _region_flag(
+    regions: list, values: list[str] | None, xyz: list[Column], probe: _Probe
+) -> Column:
+    """Region flag of a list mixing :class:`TriMesh` solids (probe parity)
+    and ``(name, bounds)`` boxes (BETWEEN predicates); ``''`` outside
+    every region."""
+    x, y, z = xyz
+    flags = []
+    for i, r in enumerate(regions):
+        if isinstance(r, TriMesh):
+            inside = probe.field(r, "in")
+        elif isinstance(r, tuple):
+            (x0, y0, z0), (x1, y1, z1) = r[1]
+            inside = (
+                x.between(float(x0), float(x1))
+                & y.between(float(y0), float(y1))
+                & z.between(float(z0), float(z1))
+            )
+        else:
+            # silently dropping these used to flag EVERY row '' and the
+            # region filter then deleted the whole block model
+            raise TypeError(
+                "region entries must be (name, bounds) tuples or TriMesh "
+                f"solids; got {type(r).__name__}"
+            )
+        flags.append((_entry_value(i, r, values), inside))
+    return _overwrite_chain(flags, F.lit(""))
+
+
+def _elevation(surface: "TriMesh | PlaneSurface", x: Column, y: Column, probe: _Probe) -> Column:
+    if isinstance(surface, PlaneSurface):
+        return surface.elevation(x, y)
+    return probe.field(surface, "z")
+
+
+def _mine(
+    include: list | None,
+    exclude: list | None,
+    xyz: list[Column],
+    dz: Column,
+    probe: _Probe,
+) -> Column:
+    """Mined fraction of each cell (the combination rules are documented
+    on :func:`mine_fraction`).  A surface contributes ``clip((z_surf - z
+    + dz/2) / dz, 0, 1)`` — the reconstructed ``vtk_block_mine`` kernel
+    (``vtk_mine.py:80-87``) — which is 0 where the surface has no
+    elevation (``greatest`` skips NULL); a ``("solid", mesh)`` entry
+    contributes its parity flag."""
+    x, y, z = xyz
+
+    def fraction(surf) -> Column:
+        if isinstance(surf, tuple) and surf[0] == "solid":
+            return probe.field(surf[1], "in").cast("double")
+        zs = _elevation(surf, x, y, probe)
+        return F.least(F.greatest((zs - z + dz / 2) / dz, F.lit(0.0)), F.lit(1.0))
+
+    inc = [fraction(s) for s in include or []]
+    if inc:
+        mine = F.greatest(*inc) if len(inc) > 1 else inc[0]
+    else:
+        mine = F.lit(1.0)  # blank include set -> fill(1)
+    # each exclude multiplies by its own (1 - fraction) — the reference
+    # applies surfaces sequentially (vtk_mine.py:86-87 per call), so two
+    # half-covering excludes keep 0.25, not 1 - max = 0.5
+    for surf in exclude or []:
+        mine = mine * F.coalesce(F.lit(1.0) - fraction(surf), F.lit(1.0))
+    return mine
+
+
 def flag_regions(
     df: DataFrame,
-    regions: list[TriMesh],
+    regions: list,
     flag_var: str = "region",
     xyz=("x", "y", "z"),
     values: list[str] | None = None,
@@ -214,48 +361,15 @@ def flag_regions(
     (``vtk_flag_regions.py:54-79``): later regions OVERWRITE earlier ones;
     rows in no region get ``''``; the flag value is the mesh name
     (= file basename in the reference pipeline, ``vtk_reserves.py:74``)
-    or an ordinal when unnamed."""
-    vals = []
-    for i, mesh in enumerate(regions):
-        if values is not None and i < len(values):
-            vals.append(str(values[i]))
-        else:
-            vals.append(mesh.name or str(i + 1))
-    payload = [(v, m) for v, m in zip(vals, regions)]
+    or an ordinal when unnamed.
 
-    @F.pandas_udf("string")
-    def region_udf(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.Series:
-        px = x.to_numpy(np.float64)
-        py = y.to_numpy(np.float64)
-        pz = z.to_numpy(np.float64)
-        out = np.full(px.size, "", dtype=object)
-        for value, mesh in payload:
-            out[point_in_solid(px, py, pz, mesh)] = value
-        return pd.Series(out)
-
-    return df.withColumn(flag_var, region_udf(*[F.col(c) for c in xyz]))
-
-
-def flag_regions_bbox(
-    df: DataFrame,
-    regions: list[tuple[str, tuple]],
-    flag_var: str = "region",
-    xyz=("x", "y", "z"),
-) -> DataFrame:
-    """Axis-aligned fast path: region solids given as named bounding boxes
-    become a chain of BETWEEN predicates — zero Python, full codegen,
-    exactly expressible in the SQL oracle.  Overwrite order preserved by
-    testing later regions first."""
-    x, y, z = (F.col(c) for c in xyz)
-    expr = F.lit("")
-    for name, ((x0, y0, z0), (x1, y1, z1)) in regions:  # earliest first
-        inside = (
-            x.between(float(x0), float(x1))
-            & y.between(float(y0), float(y1))
-            & z.between(float(z0), float(z1))
-        )
-        expr = F.when(inside, F.lit(name)).otherwise(expr)
-    return df.withColumn(flag_var, expr)
+    Entries may be :class:`TriMesh` solids (one probe call scans them
+    all) or ``(name, bounds)`` axis-aligned boxes, which become BETWEEN
+    predicates — zero Python, exactly expressible in an SQL oracle."""
+    cols = [F.col(c) for c in xyz]
+    probe = _Probe()
+    flag = _region_flag(regions, values, cols, probe)
+    return probe.apply(df, cols, {flag_var: flag})
 
 
 def flag_regions_2d(
@@ -269,26 +383,14 @@ def flag_regions_2d(
     (``vtk_flag_regions.py:28-52``): any vertical-ray hit marks the point
     as inside the mesh footprint; unmatched points get NULL (the
     reference leaves ``None`` in an object array)."""
-    vals = []
-    for i, mesh in enumerate(regions):
-        if values is not None and i < len(values):
-            vals.append(str(values[i]))
-        else:
-            vals.append(mesh.name or str(i + 1))
-    payload = [(v, m) for v, m in zip(vals, regions)]
-
-    @F.pandas_udf("string")
-    def region2d_udf(x: pd.Series, y: pd.Series) -> pd.Series:
-        px = x.to_numpy(np.float64)
-        py = y.to_numpy(np.float64)
-        pz = np.zeros(px.size)
-        out = np.full(px.size, None, dtype=object)
-        for value, mesh in payload:
-            _, n_hits, _ = _ray_scan(px, py, pz, mesh)
-            out[n_hits > 0] = value
-        return pd.Series(out)
-
-    return df.withColumn(flag_var, region2d_udf(*[F.col(c) for c in xy]))
+    x, y = (F.col(c) for c in xy)
+    probe = _Probe()
+    flags = [
+        (_entry_value(i, m, values), probe.field(m, "z").isNotNull())
+        for i, m in enumerate(regions)
+    ]
+    flag = _overwrite_chain(flags, F.lit(None).cast("string"))
+    return probe.apply(df, [x, y, F.lit(0.0)], {flag_var: flag})
 
 
 def surface_elevation(
@@ -299,23 +401,11 @@ def surface_elevation(
 ) -> DataFrame:
     """Sample the surface elevation under/over each row —
     ``get_elevation`` (``pd_vtk.py:771-796``): vertical ray against the
-    mesh, mean z of all hits; no hit -> NaN/NULL."""
+    mesh, mean z of all hits; no hit -> NULL."""
     x, y = (F.col(c) for c in xy)
-    if isinstance(surface, PlaneSurface):
-        return df.withColumn(out_col, surface.elevation(x, y))
-
-    mesh = surface
-
-    @F.pandas_udf("double")
-    def elev_udf(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        px = xs.to_numpy(np.float64)
-        py = ys.to_numpy(np.float64)
-        pz = np.zeros(px.size)
-        _, n_hits, z_sum = _ray_scan(px, py, pz, mesh)
-        out = np.where(n_hits > 0, z_sum / np.maximum(n_hits, 1), np.nan)
-        return pd.Series(out)
-
-    return df.withColumn(out_col, F.nanvl(elev_udf(x, y), F.lit(None).cast("double")))
+    probe = _Probe()
+    zs = _elevation(surface, x, y, probe)
+    return probe.apply(df, [x, y, F.lit(0.0)], {out_col: zs})
 
 
 def tridist(
@@ -413,21 +503,6 @@ def proportional_volume(
     return df.withColumn(out_col, frac_udf(*cols))
 
 
-def _surface_fraction(
-    surface, x: Column, y: Column, z: Column, dz: Column
-) -> Column:
-    """Per-cell fraction below a surface: ``clip((z_surf - z + dz/2)/dz,
-    0, 1)`` — the reconstructed ``vtk_block_mine`` kernel (call sites
-    ``vtk_mine.py:80-87``; SURVEY.md §2.5 'mine depletion').  NULL where
-    the surface has no elevation at (x,y)."""
-    if isinstance(surface, PlaneSurface):
-        zs = surface.elevation(x, y)
-    else:
-        raise TypeError("use mine_fraction(); TriMesh surfaces need an elevation join")
-    frac = (zs - z + dz / 2) / dz
-    return F.least(F.greatest(frac, F.lit(0.0)), F.lit(1.0))
-
-
 def mine_fraction(
     df: DataFrame,
     include: list | None = None,
@@ -450,63 +525,18 @@ def mine_fraction(
       (``vtk_mine`` docstring: blocks inside solids are mined).
 
     Surfaces may be :class:`PlaneSurface` (pure expressions) or
-    :class:`TriMesh` (elevation join via pandas-UDF, or parity test for
-    closed solids — pass ``("solid", mesh)`` to force solid semantics)."""
-    include = include or []
-    exclude = exclude or []
-    x, y, z = (F.col(c) for c in xyz)
-    dz = F.col(dz_col)
-
-    def one_fraction(df: DataFrame, surf, tag: str) -> tuple[DataFrame, Column]:
-        if isinstance(surf, tuple) and surf[0] == "solid":
-            mesh = surf[1]
-
-            @F.pandas_udf("double")
-            def solid_udf(xs: pd.Series, ys: pd.Series, zs: pd.Series) -> pd.Series:
-                inside = point_in_solid(
-                    xs.to_numpy(np.float64),
-                    ys.to_numpy(np.float64),
-                    zs.to_numpy(np.float64),
-                    mesh,
-                )
-                return pd.Series(inside.astype(np.float64))
-
-            col = f"__m_{tag}"
-            return df.withColumn(col, solid_udf(x, y, z)), F.col(col)
-        if isinstance(surf, PlaneSurface):
-            return df, _surface_fraction(surf, x, y, z, dz)
-        # TriMesh open surface: elevation join then clip expression
-        col = f"__zs_{tag}"
-        df = surface_elevation(df, surf, col, xy=xyz[:2])
-        frac = (F.col(col) - z + dz / 2) / dz
-        return df, F.least(F.greatest(frac, F.lit(0.0)), F.lit(1.0))
-
-    inc_cols: list[Column] = []
-    for i, surf in enumerate(include):
-        df, c = one_fraction(df, surf, f"i{i}")
-        inc_cols.append(c)
-    exc_cols: list[Column] = []
-    for i, surf in enumerate(exclude):
-        df, c = one_fraction(df, surf, f"e{i}")
-        exc_cols.append(c)
-
-    if inc_cols:
-        m_inc = F.greatest(*inc_cols) if len(inc_cols) > 1 else inc_cols[0]
-    else:
-        m_inc = F.lit(1.0)  # blank include set -> fill(1)
-    mine = m_inc
-    # each exclude multiplies by its own (1 - fraction) — the reference
-    # applies surfaces sequentially (vtk_mine.py:86-87 per call), so two
-    # half-covering excludes keep 0.25, not 1 - max = 0.5
-    for c in exc_cols:
-        mine = mine * F.coalesce(F.lit(1.0) - c, F.lit(1.0))
-    df = df.withColumn(mine_col, mine)
-    return df.drop(*[c for c in df.columns if c.startswith("__zs_") or c.startswith("__m_")])
+    :class:`TriMesh` (probe elevation; pass ``("solid", mesh)`` for the
+    parity test of a closed solid).  Depleting by a surface needs the
+    cell height column ``dz_col``; a grid without it fails analysis."""
+    cols = [F.col(c) for c in xyz]
+    probe = _Probe()
+    mine = _mine(include, exclude, cols, F.col(dz_col), probe)
+    return probe.apply(df, cols, {mine_col: mine})
 
 
 def annotate_spatial(
     df: DataFrame,
-    regions: list[TriMesh] | None = None,
+    regions: list | None = None,
     include: list | None = None,
     exclude: list | None = None,
     region_col: str = "region",
@@ -515,86 +545,13 @@ def annotate_spatial(
     dz_col: str = "dz",
     region_values: list[str] | None = None,
 ) -> DataFrame:
-    """FUSED spatial annotation: region flagging + mine depletion in ONE
-    Arrow pandas-UDF pass.
-
-    Composing :func:`flag_regions` + :func:`mine_fraction` costs one
-    ArrowEvalPython stage per TriMesh surface plus one for the region
-    flags — each a full Arrow serialize/deserialize round-trip over the
-    block model.  At 100 TB those round-trips dominate; this operator
-    evaluates every mesh (regions, includes, excludes) against each
-    record batch in a single UDF invocation and returns a struct, so the
-    cells cross the Python boundary exactly once.  Semantics are
-    identical to the composition (same ray-scan kernel, same
-    greatest/coalesce combination rules, later regions overwrite).
-    ``tests/test_plans.py`` asserts the single-ArrowEvalPython plan."""
-    regions = regions or []
-    include = include or []
-    exclude = exclude or []
-    vals = []
-    for i, mesh in enumerate(regions):
-        if region_values is not None and i < len(region_values):
-            vals.append(str(region_values[i]))
-        else:
-            vals.append(mesh.name or str(i + 1))
-    payload = list(zip(vals, regions))
-
-    def surf_frac(surf, px, py, pz, dz) -> np.ndarray:
-        """Depletion fraction for one include/exclude entry.  Where the
-        surface has no elevation at (x, y) the fraction is 0.0 — exactly
-        what the composed path computes, because Spark's
-        ``least(greatest(NULL, 0.0), 1.0)`` skips NULLs and yields 0.0."""
-        if isinstance(surf, tuple) and surf[0] == "solid":
-            return point_in_solid(px, py, pz, surf[1]).astype(np.float64)
-        if isinstance(surf, PlaneSurface):
-            zs = np.full(px.size, np.nan)
-            m = np.ones(px.size, bool)
-            if surf.xy_bounds is not None:
-                (x0, y0), (x1, y1) = surf.xy_bounds
-                m = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-            zs[m] = surf.a * px[m] + surf.b * py[m] + surf.c
-        else:
-            _, n_hits, z_sum = _ray_scan(px, py, np.zeros(px.size), surf)
-            zs = np.where(n_hits > 0, z_sum / np.maximum(n_hits, 1), np.nan)
-        with np.errstate(invalid="ignore"):
-            frac = np.clip((zs - pz + dz / 2.0) / dz, 0.0, 1.0)
-        return np.where(np.isnan(frac), 0.0, frac)
-
-    out_schema = "region: string, mine: double"
-
-    @F.pandas_udf(out_schema)
-    def fused(xs: pd.Series, ys: pd.Series, zcol: pd.Series, dzs: pd.Series) -> pd.DataFrame:
-        px = xs.to_numpy(np.float64)
-        py = ys.to_numpy(np.float64)
-        pz = zcol.to_numpy(np.float64)
-        dz = dzs.to_numpy(np.float64)
-        reg = np.full(px.size, "", dtype=object)
-        for value, mesh in payload:
-            reg[point_in_solid(px, py, pz, mesh)] = value
-        incs = [surf_frac(s, px, py, pz, dz) for s in include]
-        excs = [surf_frac(s, px, py, pz, dz) for s in exclude]
-        # fractions are always finite (missing elevation -> 0.0 above)
-        m_inc = np.maximum.reduce(incs) if incs else np.ones(px.size)
-        mine = m_inc
-        for e in excs:  # per-surface product, matching mine_fraction
-            mine = mine * (1.0 - e)
-        return pd.DataFrame({"region": reg, "mine": mine})
-
-    x, y, z = (F.col(c) for c in xyz)
-    dz = F.col(dz_col) if dz_col in df.columns else F.lit(1.0)
-    tmp = "__annot"
-    # asNondeterministic stops Catalyst from splitting the struct into
-    # one UDF evaluation per consumer (a downstream filter on `region`
-    # plus the `mine` projection would otherwise each re-run the whole
-    # ray scan — measured as two ArrowEvalPython nodes over the same
-    # rows).  The UDF is pure; the flag only restricts the optimizer.
-    df = df.withColumn(tmp, fused.asNondeterministic()(x, y, z, dz))
-    return (
-        df.withColumn(region_col, F.col(f"{tmp}.region"))
-        # NaN -> NULL so downstream agg/filters see SQL nulls, matching
-        # the unfused mine_fraction output
-        .withColumn(
-            mine_col, F.nanvl(F.col(f"{tmp}.mine"), F.lit(None).cast("double"))
-        )
-        .drop(tmp)
-    )
+    """Region flags and mine depletion with every mesh in ONE probe call:
+    the same expressions as :func:`flag_regions` and
+    :func:`mine_fraction`, so the cells cross the Python boundary once
+    instead of once per operator.  ``tests/test_plans.py`` pins the
+    single-call plan."""
+    cols = [F.col(c) for c in xyz]
+    probe = _Probe()
+    flag = _region_flag(regions or [], region_values, cols, probe)
+    mine = _mine(include, exclude, cols, F.col(dz_col), probe)
+    return probe.apply(df, cols, {region_col: flag, mine_col: mine})
