@@ -288,11 +288,18 @@ def test_media_metadata_ops_no_shuffle(spark):
 
 def test_pure_catalyst_meta_queries_no_python(spark):
     """svg_stats / html_meta / readability stay entirely inside
-    whole-stage codegen — no Python eval nodes at all."""
+    whole-stage codegen — no Python eval nodes at all.  html_meta
+    spreads its single-split documents scan first: exactly one
+    hash-partitioning Exchange (at 4 cores and sf0.1 it ran in 0.30 s
+    against 0.50 s without it); the other two have none."""
     for q in (entry.q_svg_stats, entry.q_html_meta, entry.q_readability):
         plan = _plan(q(spark, TESTDATA))
         assert "EvalPython" not in plan, q.__name__
-        assert "Exchange" not in plan, q.__name__
+        if q is entry.q_html_meta:
+            assert re.findall(r"^\(\d+\) (\w*Exchange)$", plan, re.M) == ["Exchange"]
+            assert "Arguments: hashpartitioning(" in plan
+        else:
+            assert "Exchange" not in plan, q.__name__
 
 
 def test_image_neardup_band_join_no_cartesian(spark):

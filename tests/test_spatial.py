@@ -267,10 +267,13 @@ def test_annotate_spatial_matches_composition(spark, grid):
 
 
 def test_ray_scan_scales_to_10k_faces(spark):
-    """Triangle-vectorized kernel: a 10k-face terrain against 10k points
-    must run in numpy time (was a per-triangle Python loop).  Checks
-    correctness against the analytic plane elevation and bounds the
-    wall time generously (vectorized ~0.2 s; the old loop took ~30 s)."""
+    """Vectorized kernel: a 10k-face terrain against 10k points must run
+    in numpy time (a per-triangle Python loop took ~30 s).  The terrain
+    is above the 512-face threshold, so the scan reads the CSR tile
+    index (about one face per xy tile) and gathers each point's
+    candidate faces as flat (point, face) pairs, in chunks bounded by
+    a pair count.  Checks correctness against the analytic plane
+    elevation and bounds the wall time generously (~0.01 s here)."""
     import time
 
     from vtk_reserves_spark.operators.spatial import _ray_scan
@@ -299,6 +302,138 @@ def test_ray_scan_scales_to_10k_faces(spark):
     # tolerance covers the deliberate simulation-of-simplicity ray nudge
     # (~1e-9 * extent * slope ~= 1e-7 here)
     np.testing.assert_allclose(z_sum, px / 10 + py / 20, atol=1e-5)
+
+
+def _dense_scan(px, py, pz, mesh):
+    """All-faces reference for ``_ray_scan``: every point against every
+    face in a dense (points x faces) broadcast, with the kernel's ray
+    nudge, edge tests and crossing formula, accumulating each point's
+    crossings in ascending face order."""
+    n = px.size
+    n_above, n_hits = np.zeros(n, np.int64), np.zeros(n, np.int64)
+    z_sum = np.zeros(n, np.float64)
+    if len(mesh.faces) == 0:
+        return n_above, n_hits, z_sum
+    eps = 1e-12
+    lo, hi = mesh.bounds
+    inb = (px >= lo[0] - eps) & (px <= hi[0] + eps) & (py >= lo[1] - eps) & (py <= hi[1] + eps)
+    scale = float(max(hi[0] - lo[0], hi[1] - lo[1], 1.0))
+    X = (px + 1.2345678e-9 * scale)[:, None]
+    Y = (py + 2.7182818e-9 * scale)[:, None]
+    A, B, C = (mesh.vertices[mesh.faces[:, i]] for i in range(3))
+    nrm = np.cross(B - A, C - A)
+    (ax, ay, az), (bx, by, _), (cx, cy, _) = A.T, B.T, C.T
+    d1 = (bx - ax) * (Y - ay) - (by - ay) * (X - ax)
+    d2 = (cx - bx) * (Y - by) - (cy - by) * (X - bx)
+    d3 = (ax - cx) * (Y - cy) - (ay - cy) * (X - cx)
+    hit = ((d1 > eps) & (d2 > eps) & (d3 > eps)) | ((d1 < -eps) & (d2 < -eps) & (d3 < -eps))
+    hit &= (np.abs(nrm[:, 2]) >= eps) & inb[:, None]
+    pr, fc = np.nonzero(hit)  # row-major: ascending faces per point
+    zh = az[fc] - (nrm[fc, 0] * (X[pr, 0] - ax[fc]) + nrm[fc, 1] * (Y[pr, 0] - ay[fc])) / nrm[fc, 2]
+    np.add.at(n_hits, pr, 1)
+    np.add.at(z_sum, pr, zh)
+    np.add.at(n_above, pr, (zh > pz[pr]).astype(np.int64))
+    return n_above, n_hits, z_sum
+
+
+def _layered_mesh(nqx, nqy, seed):
+    """Three jittered terrain layers (z in [0, 10], [30, 40] and [60,
+    70]) over the same 100 x 80 footprint plus one vertical wall
+    triangle: ``6 * nqx * nqy + 1`` faces, so most rays cross three
+    times and the order of a crossing sum shows."""
+    rng = np.random.default_rng(seed)
+    gx, gy = np.meshgrid(np.linspace(0, 100, nqx + 1), np.linspace(0, 80, nqy + 1), indexing="ij")
+    inner = (gx > 0) & (gx < 100) & (gy > 0) & (gy < 80)
+    gx = gx + inner * rng.uniform(-0.2, 0.2, gx.shape) * 100 / nqx
+    gy = gy + inner * rng.uniform(-0.2, 0.2, gy.shape) * 80 / nqy
+    v00 = (np.arange(nqx)[:, None] * (nqy + 1) + np.arange(nqy)).ravel()
+    v10, v01 = v00 + nqy + 1, v00 + 1
+    quads = np.concatenate([np.stack([v00, v10, v10 + 1], 1), np.stack([v00, v10 + 1, v01], 1)])
+    nv = gx.size
+    verts = [
+        np.stack([gx.ravel(), gy.ravel(), rng.uniform(z0, z0 + 10, nv)], 1)
+        for z0 in (0, 30, 60)
+    ]
+    wall = np.array([[30.0, 10.0, -5.0], [30.0, 70.0, -5.0], [30.0, 40.0, 80.0]])
+    faces = np.concatenate([quads, quads + nv, quads + 2 * nv, [[3 * nv, 3 * nv + 1, 3 * nv + 2]]])
+    return TriMesh(np.concatenate(verts + [wall]), faces)
+
+
+def _scan_points(mesh, n, seed):
+    """Seeded points over and around the mesh footprint (some outside
+    its bounds), plus points on the xy tile boundaries of its index,
+    both as given and offset by the kernel's ray nudge."""
+    from vtk_reserves_spark.operators.spatial import _tri_arrays
+
+    rng = np.random.default_rng(seed)
+    lo, hi = mesh.bounds
+    px = rng.uniform(lo[0] - 10, hi[0] + 10, n)
+    py = rng.uniform(lo[1] - 10, hi[1] + 10, n)
+    tlo, _, nt, ts = _tri_arrays(mesh)[:4]
+    k = np.arange(nt + 1)
+    bx = tlo[0] + k * ts[0]
+    by = tlo[1] + k * ts[1]
+    nudge = float(max(hi[0] - lo[0], hi[1] - lo[1], 1.0)) * np.array([1.2345678e-9, 2.7182818e-9])
+    ey = rng.uniform(lo[1], hi[1], bx.size)
+    ex = rng.uniform(lo[0], hi[0], by.size)
+    px = np.concatenate([px, bx, bx - nudge[0], ex, ex])
+    py = np.concatenate([py, ey, ey, by, by - nudge[1]])
+    pz = rng.uniform(-20, 80, px.size)
+    return px, py, pz
+
+
+@pytest.mark.parametrize(
+    "mesh, crossings",
+    [
+        pytest.param(TriMesh(np.zeros((0, 3)), np.zeros((0, 3), np.int64)), 0, id="empty"),
+        pytest.param(TriMesh([[0, 0, 1], [10, 0, 2], [0, 10, 3]], [[0, 1, 2]]), 1, id="one-face"),
+        pytest.param(
+            TriMesh([[0, 0, 0], [10, 0, 0], [0, 0, 10]], [[0, 1, 2]]), 0, id="one-vertical-face"
+        ),
+        pytest.param(TriMesh.box(((0, 0, 0), (10, 10, 10))), 2, id="box"),
+        # 510 non-vertical faces: one tile; 522: a 22 x 22 tile grid
+        pytest.param(_layered_mesh(5, 17, 1), 3, id="511-faces"),
+        pytest.param(_layered_mesh(3, 29, 2), 3, id="523-faces"),
+        pytest.param(_layered_mesh(30, 25, 3), 3, id="4501-faces"),
+    ],
+)
+def test_ray_scan_matches_dense_reference(mesh, crossings):
+    """The tiled, pair-gathered kernel returns exactly what a dense scan
+    of every face returns: the same hits, the same crossing elevations
+    summed in the same order, whatever the tile density or chunking."""
+    from vtk_reserves_spark.operators.spatial import _ray_scan
+
+    if len(mesh.faces):
+        px, py, pz = _scan_points(mesh, 3000, 11)
+    else:
+        px, py, pz = np.random.default_rng(11).uniform(0, 10, (3, 100))
+    want = _dense_scan(px, py, pz, mesh)
+    assert want[1].max() == crossings
+    for chunk in (1 << 20, 7):
+        got = _ray_scan(px, py, pz, mesh, chunk_elems=chunk)
+        for g, w in zip(got, want):
+            assert g.dtype == w.dtype
+            assert np.array_equal(g, w)
+
+
+def test_tri_cache_follows_arrays_and_stays_out_of_pickles():
+    """The ray scan's triangle index is rebuilt when the mesh's arrays
+    are replaced or edited in place, and is never pickled into a UDF
+    closure."""
+    import cloudpickle
+
+    box = TriMesh.box(((0, 0, 0), (10, 10, 10)))
+    size = len(cloudpickle.dumps(box))
+    p = np.array([5.0])
+    assert point_in_solid(p, p, p, box).tolist() == [True]
+    assert len(cloudpickle.dumps(box)) == size
+    box.vertices = box.vertices + 100
+    assert point_in_solid(p + 100, p + 100, p + 100, box).tolist() == [True]
+    assert point_in_solid(p, p, p, box).tolist() == [False]
+    box.vertices -= 100
+    assert point_in_solid(p, p, p, box).tolist() == [True]
+    box.faces = box.faces[2:]  # drop the bottom: the top alone is crossed once
+    assert point_in_solid(p, p, p - 10, box).tolist() == [True]
 
 
 def test_reserves_sample_golden_table(spark):

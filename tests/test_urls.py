@@ -174,3 +174,18 @@ def test_registered_domain_hypothesis_vs_reference(spark):
     want = [reference(h) for h in hosts]
     mism = [(h, g, w) for h, g, w in zip(hosts, got, want) if g != w]
     assert not mism, mism[:5]
+
+
+def test_ps_len_memo_keys_on_application(spark, monkeypatch):
+    """The built PSL expression is memoized per Spark application (id
+    and start time), not per ``id()`` of the context object: a stopped
+    context's id can be reused by its successor, whose JVM would then be
+    served the old application's expression."""
+    sc = spark.sparkContext
+    host = F.col("h")
+    monkeypatch.setattr(U, "_PS_LEN_MEMO", {(id(sc), str(host)): F.lit(-1)})
+    out = U._ps_len_unguarded(host)
+    assert U._PS_LEN_MEMO[(sc.applicationId, sc.startTime, str(host))] is out
+    assert U._ps_len_unguarded(host) is out
+    df = spark.createDataFrame([("bbc.co.uk",)], "h string")
+    assert df.select(out.alias("v")).first().v == 2

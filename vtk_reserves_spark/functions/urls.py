@@ -60,7 +60,8 @@ def url_query(url: Column) -> Column:
 
 
 #: built-expression memo for _ps_len_unguarded, keyed on
-#: (SparkContext id, host expression string) — see the function body.
+#: (application id, context start time, host expression string) — see
+#: the function body.
 _PS_LEN_MEMO: dict = {}
 
 
@@ -80,12 +81,13 @@ def _ps_len_unguarded(host: Column) -> Column:
     # only on the host column — reuse it for an identical host
     # expression.  Metadata only (an immutable unresolved expression
     # tree that re-resolves by name against each consumer's plan); the
-    # memo is keyed on the active SparkContext so a restarted gateway
-    # never serves stale JVM references.
+    # memo is keyed on the active application (id and start time, never
+    # the context object's ``id()``, which a restarted context can reuse)
+    # so a restarted gateway never serves stale JVM references.
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
-    key = (id(sc), str(host)) if sc is not None else None
+    key = (sc.applicationId, sc.startTime, str(host)) if sc is not None else None
     if key is not None and key in _PS_LEN_MEMO:
         return _PS_LEN_MEMO[key]
     l1 = F.substring_index(host, ".", -1)

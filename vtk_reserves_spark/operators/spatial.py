@@ -36,6 +36,7 @@ reference's VTK ray_trace has the same class of edge cases).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -72,76 +73,88 @@ class PlaneSurface:
         )
 
 
-#: face count above which _ray_scan builds an xy tile index
+#: face count at or below which a mesh is a single xy tile
 _TILE_THRESHOLD = 512
 
 
+def _tile_xy(xy, lo, ts, nt):
+    """(n, 2) xy -> (n, 2) tile column and row, clipped to the grid.
+    The index and the scan both use it: a face's tile range covers the
+    tile of every point inside it only under one monotone rule."""
+    return np.clip(((xy - lo[:2]) / ts).astype(np.int64), 0, nt - 1)
+
+
 def _tri_arrays(mesh: TriMesh):
-    """Per-mesh packed triangle arrays for the vectorized ray scan,
-    cached on the mesh object (meshes ride in UDF closures, so the cache
-    is built once per executor per mesh): vertex A/B/C and the
-    (unnormalized) face normal, all shape (F, 3), plus — for meshes over
-    ``_TILE_THRESHOLD`` faces — an xy tile index mapping each tile to
-    the faces whose xy bounding box overlaps it, so a point only tests
-    the triangles of its own tile (O(points · faces/tile) instead of
-    O(points · faces); a 100k-face topography averages a handful of
-    faces per tile)."""
+    """Packed triangles and the xy tile index :func:`_ray_scan` reads.
+
+    Vertical faces never cross a vertical ray and are left out.  The
+    index is a CSR over an ``nt x nt`` grid of xy tiles spanning the
+    mesh bounds: ``face[off[t]:off[t + 1]]`` are the faces whose xy
+    bounding box overlaps tile ``t``, in ascending order.  It is built
+    in numpy from each face's tile range (``lexsort`` of the (tile,
+    face) pairs, ``searchsorted`` offsets), with no per-face loop.
+    ``nt = isqrt(F)`` for ``F`` non-vertical faces targets about one
+    face per tile; a mesh of at most ``_TILE_THRESHOLD`` such faces is
+    one tile.  Per face: the x, y of vertices A, B, C, the z of A, the
+    edge differences ``B - A``, ``C - B``, ``A - C`` in x and y, and
+    the (unnormalized) normal.
+
+    Cached on the mesh, keyed on copies of the vertex and face arrays it
+    was built from (reassigning or editing either in place rebuilds it);
+    :class:`TriMesh` leaves it out of its pickled state, so a mesh
+    shipped in a UDF closure builds it once per task."""
+    key = (mesh.vertices, mesh.faces)
     cached = getattr(mesh, "_tri_cache", None)
-    if cached is None:
-        V = mesh.vertices
-        A = V[mesh.faces[:, 0]]
-        B = V[mesh.faces[:, 1]]
-        C = V[mesh.faces[:, 2]]
-        nrm = np.cross(B - A, C - A)  # (nx, ny, nz) per face
-        tile = None
-        nf = len(A)
-        if nf > _TILE_THRESHOLD:
-            lo, hi = mesh.bounds
-            nt = max(2, int(np.sqrt(nf / 8.0)))  # ~8 faces/tile target
-            tsx = max((hi[0] - lo[0]) / nt, _EPS)
-            tsy = max((hi[1] - lo[1]) / nt, _EPS)
-            fx = np.stack([A[:, 0], B[:, 0], C[:, 0]])
-            fy = np.stack([A[:, 1], B[:, 1], C[:, 1]])
-            x0 = np.clip(((fx.min(0) - lo[0]) / tsx).astype(np.int64), 0, nt - 1)
-            x1 = np.clip(((fx.max(0) - lo[0]) / tsx).astype(np.int64), 0, nt - 1)
-            y0 = np.clip(((fy.min(0) - lo[1]) / tsy).astype(np.int64), 0, nt - 1)
-            y1 = np.clip(((fy.max(0) - lo[1]) / tsy).astype(np.int64), 0, nt - 1)
-            buckets: dict[int, list[int]] = {}
-            for f in range(nf):
-                for tx in range(x0[f], x1[f] + 1):
-                    for ty in range(y0[f], y1[f] + 1):
-                        buckets.setdefault(tx * nt + ty, []).append(f)
-            tile = (
-                nt,
-                tsx,
-                tsy,
-                lo,
-                {t: np.asarray(fs, np.int64) for t, fs in buckets.items()},
-            )
-        cached = (A, B, C, nrm, tile)
-        mesh._tri_cache = cached
-    return cached
+    if cached is not None and all(map(np.array_equal, cached[0], key)):
+        return cached[1]
+    V, fc = key
+    A, B, C = V[fc[:, 0]], V[fc[:, 1]], V[fc[:, 2]]
+    nrm = np.cross(B - A, C - A)  # (nx, ny, nz) per face
+    flat = np.abs(nrm[:, 2]) >= _EPS  # vertical tris never cross a +z ray
+    A, B, C, nrm = A[flat], B[flat], C[flat], nrm[flat]
+    lo, hi = mesh.bounds
+    nt = math.isqrt(len(A)) if len(A) > _TILE_THRESHOLD else 1
+    ts = np.maximum((hi[:2] - lo[:2]) / nt, _EPS)
+    vxy = np.stack([A[:, :2], B[:, :2], C[:, :2]])
+    t0, t1 = _tile_xy(vxy.min(0), lo, ts, nt), _tile_xy(vxy.max(0), lo, ts, nt)
+    wy = t1[:, 1] - t0[:, 1] + 1
+    cnt = (t1[:, 0] - t0[:, 0] + 1) * wy
+    face = np.repeat(np.arange(len(A)), cnt)
+    k = np.arange(face.size) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    tile = (t0[face, 0] + k // wy[face]) * nt + t0[face, 1] + k % wy[face]
+    order = np.lexsort((face, tile))
+    off = np.searchsorted(tile[order], np.arange(nt * nt + 1))
+    (ax, ay, az), (bx, by, _), (cx, cy, _) = A.T, B.T, C.T
+    tri = (ax, ay, az, bx, by, cx, cy,
+           bx - ax, by - ay, cx - bx, cy - by, ax - cx, ay - cy, *nrm.T)
+    index = (lo, hi, nt, ts, off, face[order], tri)
+    mesh._tri_cache = (tuple(a.copy() for a in key), index)
+    return index
 
 
-def _ray_scan(px, py, pz, mesh: TriMesh, chunk_elems: int = 4_000_000):
+def _ray_scan(px, py, pz, mesh: TriMesh, chunk_elems: int = 1 << 20):
     """Vertical-ray crossing scan of a point batch against a mesh.
 
     Returns (n_above, n_hits, z_sum) int64/int64/float64 arrays: crossings
     strictly above each point, total crossings, and the sum of crossing
-    elevations.  Fully vectorized: triangles are batched in numpy
-    (no per-triangle Python loop), with points processed in chunks of
-    ``chunk_elems // n_faces`` so the (points x faces) broadcast stays
-    within a bounded working set — a 100k-face topography costs numpy
-    throughput, not interpreter time."""
+    elevations.  Fully vectorized, with no Python loop over tiles or
+    faces: every (point, candidate face) pair of the batch, the
+    candidates being the faces of the point's xy tile
+    (:func:`_tri_arrays`), is gathered into flat arrays with one
+    ``repeat`` plus offsets; the edge tests and crossing elevations run
+    on those arrays, and the per-point sums are ``bincount``s, which add
+    each point's crossings in ascending face order.  Points are taken in
+    chunks of at most ``chunk_elems`` pairs (one point's pairs are never
+    split), which bounds the working set."""
     n = px.size
     n_above = np.zeros(n, np.int64)
     n_hits = np.zeros(n, np.int64)
     z_sum = np.zeros(n, np.float64)
     if len(mesh.faces) == 0:
         return n_above, n_hits, z_sum
-    lo, hi = mesh.bounds
+    lo, hi, nt, ts, off, face, tri = _tri_arrays(mesh)
     m = (px >= lo[0] - _EPS) & (px <= hi[0] + _EPS) & (py >= lo[1] - _EPS) & (py <= hi[1] + _EPS)
-    if not m.any():
+    if face.size == 0 or not m.any():
         return n_above, n_hits, z_sum
     # Simulation-of-simplicity: nudge the ray xy by a deterministic,
     # scale-relative epsilon so rays almost surely miss projected triangle
@@ -150,58 +163,38 @@ def _ray_scan(px, py, pz, mesh: TriMesh, chunk_elems: int = 4_000_000):
     # introduces is O(1e-9 * extent * slope) — far below float noise at
     # mining-model scales.
     scale = float(max(hi[0] - lo[0], hi[1] - lo[1], 1.0))
-    qx = px[m] + 1.2345678e-9 * scale
-    qy = py[m] + 2.7182818e-9 * scale
-    qz = pz[m]
     idx = np.nonzero(m)[0]
-    A, B, C, nrm, tile = _tri_arrays(mesh)
-
-    def scan_block(psel: np.ndarray, fsel: np.ndarray | None) -> None:
-        """Dense (selected points x selected faces) scan, accumulating
-        into the global output arrays."""
-        ax, ay, az = (A[fsel, i] if fsel is not None else A[:, i] for i in range(3))
-        bx, by = (B[fsel, i] if fsel is not None else B[:, i] for i in range(2))
-        cx, cy = (C[fsel, i] if fsel is not None else C[:, i] for i in range(2))
-        nx, ny, nz = (nrm[fsel, i] if fsel is not None else nrm[:, i] for i in range(3))
-        flat = np.abs(nz) >= _EPS  # vertical tris never cross a +z ray
-        nz_safe = np.where(flat, nz, 1.0)
-        step = max(1, chunk_elems // max(len(ax), 1))
-        for s in range(0, psel.size, step):
-            p = psel[s : s + step]
-            X = qx[p, None]  # (points, 1) vs (faces,) -> (points, faces)
-            Y = qy[p, None]
-            d1 = (bx - ax) * (Y - ay) - (by - ay) * (X - ax)
-            d2 = (cx - bx) * (Y - by) - (cy - by) * (X - bx)
-            d3 = (ax - cx) * (Y - cy) - (ay - cy) * (X - cx)
-            hit = ((d1 > _EPS) & (d2 > _EPS) & (d3 > _EPS)) | (
-                (d1 < -_EPS) & (d2 < -_EPS) & (d3 < -_EPS)
-            )
-            hit &= flat
-            pr, fc = np.nonzero(hit)  # hits are sparse: gather, not dense
-            if pr.size == 0:
-                continue
-            zh = az[fc] - (
-                nx[fc] * (qx[p][pr] - ax[fc]) + ny[fc] * (qy[p][pr] - ay[fc])
-            ) / nz_safe[fc]
-            tgt = idx[p][pr]
-            np.add.at(n_hits, tgt, 1)
-            np.add.at(z_sum, tgt, zh)
-            np.add.at(n_above, tgt, (zh > qz[p][pr]).astype(np.int64))
-
-    if tile is None:
-        scan_block(np.arange(qx.size), None)
-    else:
-        nt, tsx, tsy, tlo, buckets = tile
-        tx = np.clip(((qx - tlo[0]) / tsx).astype(np.int64), 0, nt - 1)
-        ty = np.clip(((qy - tlo[1]) / tsy).astype(np.int64), 0, nt - 1)
-        tid = tx * nt + ty
-        order = np.argsort(tid, kind="stable")
-        bounds = np.searchsorted(tid[order], np.arange(nt * nt + 1))
-        for t in np.unique(tid):
-            fsel = buckets.get(int(t))
-            if fsel is None:
-                continue
-            scan_block(order[bounds[t] : bounds[t + 1]], fsel)
+    qx = px[idx] + 1.2345678e-9 * scale
+    qy = py[idx] + 2.7182818e-9 * scale
+    qz = pz[idx]
+    txy = _tile_xy(np.stack([qx, qy], 1), lo, ts, nt)
+    t = txy[:, 0] * nt + txy[:, 1]
+    first = off[t]
+    cnt = off[t + 1] - first
+    ends = np.cumsum(cnt)
+    ax, ay, az, bx, by, cx, cy, e1x, e1y, e2x, e2y, e3x, e3y, nx, ny, nz = tri
+    s = 0
+    while s < idx.size:
+        base = ends[s - 1] if s else 0
+        e = max(s + 1, int(np.searchsorted(ends, base + chunk_elems, "right")))
+        c = cnt[s:e]
+        # pair j of point i reads CSR entry first[i] + j
+        pt = np.repeat(np.arange(e - s), c)
+        f = face[np.arange(ends[e - 1] - base) + np.repeat(first[s:e] - (ends[s:e] - c - base), c)]
+        X, Y = qx[s:e][pt], qy[s:e][pt]
+        d1 = e1x[f] * (Y - ay[f]) - e1y[f] * (X - ax[f])
+        d2 = e2x[f] * (Y - by[f]) - e2y[f] * (X - bx[f])
+        d3 = e3x[f] * (Y - cy[f]) - e3y[f] * (X - cx[f])
+        hit = ((d1 > _EPS) & (d2 > _EPS) & (d3 > _EPS)) | (
+            (d1 < -_EPS) & (d2 < -_EPS) & (d3 < -_EPS)
+        )
+        p, f, X, Y = pt[hit], f[hit], X[hit], Y[hit]  # hits are sparse
+        zh = az[f] - (nx[f] * (X - ax[f]) + ny[f] * (Y - ay[f])) / nz[f]
+        tgt = idx[s:e]
+        n_hits[tgt] = np.bincount(p, minlength=e - s)
+        z_sum[tgt] = np.bincount(p, weights=zh, minlength=e - s)
+        n_above[tgt] = np.bincount(p[zh > qz[s:e][p]], minlength=e - s)
+        s = e
     return n_above, n_hits, z_sum
 
 

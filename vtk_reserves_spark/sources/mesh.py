@@ -37,6 +37,11 @@ class TriMesh:
         self.vertices = np.asarray(self.vertices, dtype=np.float64).reshape(-1, 3)
         self.faces = np.asarray(self.faces, dtype=np.int64).reshape(-1, 3)
 
+    def __getstate__(self):
+        # private attributes are caches derived from the arrays (the ray
+        # scan's triangle index): rebuilt where used, never shipped
+        return {k: v for k, v in self.__dict__.items() if not k.startswith("_")}
+
     @property
     def bounds(self) -> np.ndarray:
         """``[[xmin,ymin,zmin],[xmax,ymax,zmax]]`` (pyvista ``mesh.bounds``
